@@ -6,13 +6,15 @@ Runs the headline queries from the registry against
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
     {"metric": "headline_total", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "sf": 0.1, "errors": {}}
 
 Execution is a ``noop``-format write so every query runs end-to-end on
 executors (full scan → shuffle → sink) without driver-side collect —
 the same way you'd measure on a cluster. One warm-up pass on the
 smallest fixture primes the JVM/codegen so timings reflect steady
-state, not first-query JIT.
+state, not first-query JIT. A query whose warm-up raises is reported
+under ``errors``, skipped in the timed pass, and makes the run exit
+non-zero.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ import re
 import sys
 import time
 
+from rpa_etl_investing_spark import profile
 from rpa_etl_investing_spark.session import get_spark
 
 # Headline set: one representative per heavy operator family (scan-agg,
@@ -88,22 +91,12 @@ def main() -> int:
 
     from rpa_etl_investing_spark.plans import QUERIES
 
-    # pre-touch a fixed-size heap: lazily-grown JVM memory first-faults
-    # inside the VM at ~GB/s of pure kernel time, which otherwise lands
-    # in whichever query grows the heap and dominates its timing
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    spark = get_spark(
-        app_name="bench",
-        extra_conf={
-            "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch"
-        },
-    )
+    spark = get_spark(app_name="bench", extra_conf=profile.heap_conf())
     warm_dir = "/root/testdata/sf0.001"
-    for bench_name, reg_name in HEADLINE.items():
-        try:
-            _run(spark, QUERIES[reg_name].fn, warm_dir)
-        except Exception:
-            pass  # warm-up failures surface in the timed pass
+    # a query that fails its warm-up is reported under `errors` and
+    # left out of the timed pass; the run then exits non-zero
+    warm_errors = profile.warm_up(spark, HEADLINE.values(), warm_dir)
+    errors = {b: warm_errors[r] for b, r in HEADLINE.items() if r in warm_errors}
 
     # 5 reps per query: first executions still pay per-plan codegen +
     # JIT, and the host steals CPU in multi-second bursts (measured:
@@ -115,24 +108,24 @@ def main() -> int:
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
     for bench_name, reg_name in HEADLINE.items():
+        if bench_name in errors:
+            continue
         reps = sorted(_run(spark, QUERIES[reg_name].fn, sf_dir) for _ in range(5))
         timings[bench_name] = round(reps[2], 3)
         timings_min[bench_name] = round(reps[0], 3)
 
     aqe_skew: dict[str, bool] = {}
     for bench_name in _AQE_PROBE:
-        # checksum-wrapper: execute the SAME QueryExecution we inspect
-        # (a noop write plans a fresh one, and an unexecuted adaptive
-        # plan never shows AQE's runtime skew decision) while forcing
-        # every output column through the join — a bare count() lets
-        # Catalyst prune the payload and understates the shuffle
-        from pyspark.sql import functions as F
-
-        df = QUERIES[HEADLINE[bench_name]].fn(spark, sf_dir)
-        probe = df.select(F.xxhash64(F.struct(*df.columns)).alias("_h")).agg(F.sum(F.col("_h").cast("decimal(38,0)")))
-        probe.collect()
+        if bench_name in errors:
+            continue
+        # execute the SAME QueryExecution we inspect: a noop write plans
+        # a fresh one, and an unexecuted adaptive plan never shows AQE's
+        # runtime skew decision
+        probe = profile.checksum_all_columns(
+            QUERIES[HEADLINE[bench_name]].fn(spark, sf_dir)
+        )
         plan = probe._jdf.queryExecution().executedPlan().toString()
-        aqe_skew[bench_name] = "skew=true" in plan.split("== Initial Plan ==")[0]
+        aqe_skew[bench_name] = profile.plan_features(plan)["aqe_skew"]
 
     sub12 = sum(
         t
@@ -149,9 +142,10 @@ def main() -> int:
         "subtotal_12": round(sub12, 3),
         "aqe_skew_join_applied": aqe_skew,
         "sf": sf,
+        "errors": errors,
     }
     print(json.dumps(out))
-    return 0
+    return 1 if errors else 0
 
 
 if __name__ == "__main__":

@@ -9,6 +9,8 @@ pruning and partition-level parallelism for free.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -103,6 +105,10 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # generation) — self-sufficient on any caller-owned session, no
 # hardcoded schemas.
 _SCHEMA_CACHE: dict[tuple[str, str, int], object] = {}
+# Guards the dead-app eviction scan + insert: iterating the dict while
+# another thread inserts raises "dictionary changed size during
+# iteration". Never held across the footer inference itself.
+_SCHEMA_LOCK = threading.Lock()
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -151,9 +157,10 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # one footer inference per (session, table, generation); benign
         # race under concurrent first calls (both infer the same schema)
         schema = spark.read.parquet(path).schema
-        for stale in [k for k in _SCHEMA_CACHE if k[0] != app]:
-            _SCHEMA_CACHE.pop(stale, None)
-        _SCHEMA_CACHE[key] = schema
+        with _SCHEMA_LOCK:
+            for stale in [k for k in _SCHEMA_CACHE if k[0] != app]:
+                del _SCHEMA_CACHE[stale]
+            _SCHEMA_CACHE[key] = schema
     df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
@@ -182,13 +189,14 @@ def estimate_scan_partitions(df: DataFrame) -> int | None:
     ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     totalBytes/parallelism))`` where every file carries the open cost;
     each file is cut into ``maxSplitBytes`` chunks, chunks are sorted by
-    size descending and packed greedily, closing a partition when adding
-    the next split (costed at size+openCost) would exceed
-    ``maxSplitBytes``; an empty partition always accepts its first
-    split. Returns ``None`` when the plan has no file index
-    (e.g. an in-memory relation — caller falls back) and ``len(files)``
-    for non-local URIs whose sizes the driver can't stat cheaply (a
-    lower bound: every file is at least one split).
+    size descending and packed greedily, closing a partition when the
+    next split's size would take it past ``maxSplitBytes``; a placed
+    split then costs its size plus ``openCostInBytes``, and an empty
+    partition always accepts its first split. Returns ``None`` when the
+    plan has no file index (e.g. an in-memory relation — caller falls
+    back) and ``len(files)`` for non-local URIs whose sizes the driver
+    can't stat cheaply (a lower bound: every file is at least one
+    split).
     """
     import os
     from urllib.parse import unquote, urlparse
@@ -222,11 +230,10 @@ def estimate_scan_partitions(df: DataFrame) -> int | None:
     chunks.sort(reverse=True)
     partitions, current = 0, 0
     for c in chunks:
-        cost = c + open_cost
-        if current > 0 and current + cost > split:
+        if current > 0 and current + c > split:
             partitions += 1
             current = 0
-        current += cost
+        current += c + open_cost
     if current > 0:
         partitions += 1
     return max(1, partitions)

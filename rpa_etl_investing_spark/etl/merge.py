@@ -28,7 +28,6 @@ def merge_apply(
     changes: DataFrame,
     key: str,
     op_col: str = "op",
-    broadcast_changes: bool = True,
     seq_col: str | None = None,
 ) -> DataFrame:
     """Apply ``changes`` to ``base``. ``changes`` carries the base
@@ -55,11 +54,9 @@ def merge_apply(
       batch, which is broadcast-small by assumption; pass ``seq_col``
       to avoid it.)
 
-    ``broadcast_changes=True`` (the default, and the right call for any
-    normal CDC batch) pins the anti join to a broadcast — base scanned
-    map-only, zero shuffle. Pass ``False`` for the rare batch too big
-    to broadcast: same semantics, the join shuffles both sides on the
-    key instead."""
+    The anti join is pinned to a broadcast of the change keys (the
+    right call for any normal CDC batch): base scanned map-only, zero
+    shuffle."""
     if seq_col is not None:
         from pyspark.sql.window import Window as W
 
@@ -83,8 +80,6 @@ def merge_apply(
                 f"merge_apply: multiple change rows for key(s) {keys}; "
                 "pass seq_col to apply latest-wins, or pre-compact the batch"
             )
-    change_keys = changes.select(key)
-    probe = F.broadcast(change_keys) if broadcast_changes else change_keys
-    kept = base.join(probe, key, "left_anti")
+    kept = base.join(F.broadcast(changes.select(key)), key, "left_anti")
     upserts = changes.filter(F.col(op_col) == "U").select(*base.columns)
     return kept.unionByName(upserts)

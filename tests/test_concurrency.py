@@ -221,3 +221,52 @@ def test_ship_package_concurrent_first_touch(spark):
         spark.sparkContext.addPyFile = orig_add
     assert len(builds) == 1, f"expected one ship, got {len(builds)}"
     assert app in contract._SHIPPED
+
+
+def test_schema_cache_concurrent_eviction(monkeypatch):
+    """catalog.tbl scans the schema cache for dead-app entries on every
+    miss while other threads insert. A mocked session from 8 threads at
+    a 1 µs switch interval, every call a miss on a fresh path (so the
+    cache grows and each scan is long): no scan may see the dict change
+    size under it."""
+    import sys
+    from types import SimpleNamespace
+
+    from rpa_etl_investing_spark import catalog
+
+    monkeypatch.setattr(catalog, "_SCHEMA_CACHE", {})
+    frame = SimpleNamespace(schema="schema")
+    reader = SimpleNamespace(
+        parquet=lambda path: frame,
+        schema=lambda s: SimpleNamespace(parquet=lambda path: frame),
+    )
+
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(set=lambda k, v: None),
+        read=reader,
+        sparkContext=SimpleNamespace(applicationId="app"),
+    )
+
+    errors: list[str] = []
+    start = threading.Barrier(8)
+
+    def hammer(tid: int) -> None:
+        try:
+            start.wait(timeout=30)
+            for i in range(1000):
+                catalog.tbl(spark, f"t{tid}/sf{i}", "nation")
+        except Exception as e:  # noqa: BLE001
+            errors.append(f"t{tid}: {type(e).__name__}: {e}")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads), "hammer threads hung"
+    assert not errors, errors[:3]
