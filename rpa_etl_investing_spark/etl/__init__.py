@@ -8,6 +8,8 @@ becomes a DataFrame transform; the per-row commit anti-pattern
 """
 
 from rpa_etl_investing_spark.etl.pipeline import (
+    DIM_SCHEMA,
+    FACT_SCHEMA,
     RAW_SCRAPE_SCHEMA,
     flagship_top10,
     load_star_schema,
@@ -24,6 +26,8 @@ from rpa_etl_investing_spark.etl.sector_maps import (
 
 __all__ = [
     "RAW_SCRAPE_SCHEMA",
+    "DIM_SCHEMA",
+    "FACT_SCHEMA",
     "transform_raw",
     "upsert_dimension",
     "resolve_fact_keys",

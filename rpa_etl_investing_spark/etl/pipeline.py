@@ -14,6 +14,10 @@ autoincrement surrogate keys            deterministic ``row_number`` over the
 (``main.py:26,31,36``)                  natural key, offset by current max
 silent malformed-row drop               rejects split into an observable
 (``main.py:116-117``)                   DataFrame with counts
+ORM classes own the table schemas       the module's stored schemas
+(``main.py:23-44``)                     (``DIM_SCHEMA``, ``FACT_SCHEMA``)
+                                        name every warehouse read, replacing
+                                        a footer-inference job per read
 =====================================  =====================================
 
 At 100 TB the same shapes hold: the anti-join touches only the delta's
@@ -56,6 +60,31 @@ RAW_SCRAPE_SCHEMA = T.StructType(
     ]
 )
 
+# Stored schemas of the warehouse tables this module writes: a (id, nome)
+# dimension, and the fact as ``resolve_fact_keys`` emits it plus the
+# ``dt_coleta`` partition column. Reads name them instead of inferring
+# them, which costs one Spark job per read to open a parquet footer.
+# ``tests/test_etl.py`` checks them against the written footers.
+DIM_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), True),
+        T.StructField("nome", T.StringType(), True),
+    ]
+)
+FACT_SCHEMA = T.StructType(
+    [
+        T.StructField("nome", T.StringType(), True),
+        T.StructField("pais_id", T.LongType(), True),
+        T.StructField("setor_id", T.LongType(), True),
+        T.StructField("valor_atual", T.DoubleType(), True),
+        T.StructField("maxima", T.DoubleType(), True),
+        T.StructField("minima", T.DoubleType(), True),
+        T.StructField("variacao", T.DoubleType(), True),
+        T.StructField("data_coleta", T.TimestampType(), True),
+        T.StructField("dt_coleta", T.DateType(), True),
+    ]
+)
+
 
 @dataclass
 class TransformResult:
@@ -83,6 +112,12 @@ def transform_raw(raw: DataFrame) -> TransformResult:
     """Locale-parse the numeric cells and classify the sector
     (``main.py:100-106``), splitting unparseable rows into ``rejects``
     instead of dropping them silently."""
+    return _split(_parse(raw))
+
+
+def _parse(raw: DataFrame) -> DataFrame:
+    """Every raw row, locale-parsed, with an ``_ok`` flag marking the rows
+    whose five cells all parsed."""
     parsed = raw.select(
         F.trim(F.col("nome")).alias("nome"),
         parse_brazilian_number("valor_atual_raw").alias("valor_atual"),
@@ -98,7 +133,12 @@ def transform_raw(raw: DataFrame) -> TransformResult:
         & F.col("minima").isNotNull()
         & F.col("variacao").isNotNull()
     )
-    parsed = parsed.withColumn("_ok", ok)
+    return parsed.withColumn("_ok", ok)
+
+
+def _split(parsed: DataFrame) -> TransformResult:
+    """Split :func:`_parse` output on its ``_ok`` flag; clean rows gain
+    their sector."""
     clean = (
         parsed.filter("_ok")
         .drop("_ok")
@@ -203,6 +243,12 @@ def resolve_fact_keys(
     )
 
 
+def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read a warehouse table under its stored schema; a missing path
+    still raises at read time."""
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_star_schema(
     spark: SparkSession,
     raw: DataFrame,
@@ -213,10 +259,17 @@ def load_star_schema(
     upsert both dims → resolve FKs → single append write of the fact.
     Returns row-count metrics, including rejected rows (observable,
     unlike ``main.py:116-117``)."""
-    result = transform_raw(raw)
     from rpa_etl_investing_spark.operators.caching import persist_once
 
-    clean = persist_once(result.clean)
+    # The batch is parsed once: both counts come from one aggregate over
+    # the persisted parse, which also fills the cache the dimension
+    # upserts and the fact then read.
+    parsed = persist_once(_parse(raw))
+    counts = parsed.agg(
+        F.count_if("_ok").alias("clean_rows"),
+        F.count_if(~F.col("_ok")).alias("rejected_rows"),
+    ).first()
+    clean = _split(parsed).clean
 
     def read_dim(name: str) -> DataFrame | None:
         # Only the path-missing case means "first run" (main.py:20-22).
@@ -228,7 +281,7 @@ def load_star_schema(
         from pyspark.errors import AnalysisException
 
         try:
-            return spark.read.parquet(f"{warehouse}/{name}")
+            return _read(spark, f"{warehouse}/{name}", DIM_SCHEMA)
         except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
             msg = str(e)
             if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
@@ -237,11 +290,11 @@ def load_star_schema(
 
     dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
     dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
-    dim_pais = spark.read.parquet(f"{warehouse}/pais.tmp")
+    dim_pais = _read(spark, f"{warehouse}/pais.tmp", DIM_SCHEMA)
 
     dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
     dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
-    dim_setor = spark.read.parquet(f"{warehouse}/setor.tmp")
+    dim_setor = _read(spark, f"{warehouse}/setor.tmp", DIM_SCHEMA)
 
     # Publish the dim snapshots BEFORE appending the fact: the updated dims
     # are supersets of the old ones, so publishing them first is always safe,
@@ -256,8 +309,8 @@ def load_star_schema(
     for name in ("pais", "setor"):
         shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
         shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
-    dim_pais = spark.read.parquet(f"{warehouse}/pais")
-    dim_setor = spark.read.parquet(f"{warehouse}/setor")
+    dim_pais = _read(spark, f"{warehouse}/pais", DIM_SCHEMA)
+    dim_setor = _read(spark, f"{warehouse}/setor", DIM_SCHEMA)
     fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
 
     # partition the append-only fact by ingestion date: snapshot queries
@@ -269,13 +322,13 @@ def load_star_schema(
     ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
 
     metrics = {
-        "clean_rows": clean.count(),
-        "rejected_rows": result.rejects.count(),
-        "pais_rows": spark.read.parquet(f"{warehouse}/pais").count(),
-        "setor_rows": spark.read.parquet(f"{warehouse}/setor").count(),
-        "fact_rows": spark.read.parquet(f"{warehouse}/indice_financeiro").count(),
+        "clean_rows": counts["clean_rows"],
+        "rejected_rows": counts["rejected_rows"],
+        "pais_rows": dim_pais.count(),
+        "setor_rows": dim_setor.count(),
+        "fact_rows": _read(spark, f"{warehouse}/indice_financeiro", FACT_SCHEMA).count(),
     }
-    clean.unpersist()
+    parsed.unpersist()
     return metrics
 
 
@@ -284,9 +337,9 @@ def flagship_top10(spark: SparkSession, warehouse: str) -> DataFrame:
     (``main.py:149-157``): top-10 by ``maxima`` where setor='Primário'
     and pais IN (China, EUA), two broadcast dim joins, with ``nome`` as
     deterministic tie-breaker."""
-    fact = spark.read.parquet(f"{warehouse}/indice_financeiro")
-    pais = spark.read.parquet(f"{warehouse}/pais")
-    setor = spark.read.parquet(f"{warehouse}/setor")
+    fact = _read(spark, f"{warehouse}/indice_financeiro", FACT_SCHEMA)
+    pais = _read(spark, f"{warehouse}/pais", DIM_SCHEMA)
+    setor = _read(spark, f"{warehouse}/setor", DIM_SCHEMA)
     return (
         fact.join(F.broadcast(pais), fact.pais_id == pais.id)
         .join(F.broadcast(setor), fact.setor_id == setor.id)

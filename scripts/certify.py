@@ -18,12 +18,15 @@ stamp predated them. This script closes that hole (r6 verdict item #2):
 4. Runs the same sweep from an 8-THREAD pool (r8, verdict item #5: the
    r7 concurrent stamp was taken mid-round at registry size 349; it is
    now a frozen-tree leg of every certification).
-5. Refuses to stamp if any tracked file exceeds 50 MB (r8, verdict
+5. Runs the benchmark's smoke suite (``pytest perfbench/tests``): every
+   workload end to end at sf0.001 with its output checks, the ETL
+   load's truth checks included.
+6. Refuses to stamp if any tracked file exceeds 50 MB (r8, verdict
    item #3: the r5 DuckDB-spill blob guard).
-6. Optionally (--stress) re-runs the sweep at sf0.1 with an 8g heap.
-7. Optionally (--scale-gate) runs the 10× plan-shape assertions
+7. Optionally (--stress) re-runs the sweep at sf0.1 with an 8g heap.
+8. Optionally (--scale-gate) runs the 10× plan-shape assertions
    (SPARK_GRAFT_SCALE_GATE=1, needs /tmp/sf1 built).
-8. Writes ``LOCAL_VERIFY_r{N}.json`` carrying the certified ``git_sha``
+9. Writes ``LOCAL_VERIFY_r{N}.json`` carrying the certified ``git_sha``
    plus all result blocks, and exits nonzero unless everything is green.
 
 Usage: python scripts/certify.py ROUND_NUMBER [--stress] [--skip-pytest]
@@ -180,6 +183,11 @@ def main() -> int:
                               if k != "tail"}))
             pytest_keys.append(key)
 
+    print(f"[certify r{rnd}] perfbench smoke (pytest perfbench/tests) ...")
+    record["perfbench_smoke"] = run_pytest(["perfbench/tests"])
+    print(json.dumps({k: v for k, v in record["perfbench_smoke"].items()
+                      if k != "tail"}))
+
     if scale_gate:
         # 10× plan-shape assertions (r8, verdict item #5): requires the
         # derived sf1 fixture at /tmp/sf1 (scripts/make_scale_fixture.py)
@@ -202,7 +210,8 @@ def main() -> int:
     conc_ok = (leg_ok(record["concurrent_sweep_sf001"])
                and leg_ok(record["concurrent_sweep_sf001_rep2"]))
     stress_ok = (not stress) or leg_ok(record["stress_sf01"])
-    pytest_ok = all(record[k]["exit_code"] == 0 for k in pytest_keys)
+    pytest_ok = all(record[k]["exit_code"] == 0
+                    for k in [*pytest_keys, "perfbench_smoke"])
     gate_ok = (not scale_gate) or record["scale_gate_sf1"]["exit_code"] == 0
     record["green"] = bool(
         sweep_ok and conc_ok and stress_ok and pytest_ok and gate_ok

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from rpa_etl_investing_spark.etl import (
+    DIM_SCHEMA,
+    FACT_SCHEMA,
     RAW_SCRAPE_SCHEMA,
     flagship_top10,
     load_star_schema,
@@ -127,6 +129,66 @@ def test_full_load_and_flagship_query(spark, raw_df, tmp_path):
     assert m2["pais_rows"] == 3
     assert m2["setor_rows"] == 4
     assert m2["fact_rows"] == 14
+
+
+def test_pinned_schemas_match_written_footers(spark, raw_df, tmp_path):
+    """Warehouse reads name DIM_SCHEMA / FACT_SCHEMA instead of inferring
+    them; a writer that drifted from the pins would read back as silent
+    NULL columns, so the footers the load writes must match them."""
+    wh = str(tmp_path / "warehouse")
+    load_star_schema(spark, raw_df, wh, PIN_TS)
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for name, pinned in (
+        ("pais", DIM_SCHEMA),
+        ("setor", DIM_SCHEMA),
+        ("indice_financeiro", FACT_SCHEMA),
+    ):
+        inferred = spark.read.parquet(f"{wh}/{name}").schema
+        assert fields(inferred) == fields(pinned), name
+
+
+# Spark jobs the upsert load (the second load into a warehouse) launches
+# on the fixture batch.
+UPSERT_LOAD_JOB_BUDGET = 24
+
+
+def test_load_job_budget_and_cold_contract(spark, raw_df, tmp_path):
+    """The load's driver round trips are bounded, building the flagship
+    query runs no job, and a load leaves nothing persisted."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    # Earlier tests' locally checkpointed RDDs stay persisted until the JVM
+    # collects them, so the check is that a load adds none.
+    before = persisted()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    wh = str(tmp_path / "warehouse")
+    tag = tmp_path.name
+    jobs_of(f"{tag}:first", lambda: load_star_schema(spark, raw_df, wh, PIN_TS))
+    assert persisted() <= before
+    upsert_jobs = jobs_of(
+        f"{tag}:upsert",
+        lambda: load_star_schema(spark, raw_df, wh, PIN_TS + dt.timedelta(days=1)),
+    )
+    assert persisted() <= before
+    assert upsert_jobs <= UPSERT_LOAD_JOB_BUDGET, upsert_jobs
+    assert jobs_of(f"{tag}:flagship", lambda: flagship_top10(spark, wh)) == 0
 
 
 def test_incremental_streaming_load(spark, tmp_path):
