@@ -265,71 +265,75 @@ def load_star_schema(
     # the persisted parse, which also fills the cache the dimension
     # upserts and the fact then read.
     parsed = persist_once(_parse(raw))
-    counts = parsed.agg(
-        F.count_if("_ok").alias("clean_rows"),
-        F.count_if(~F.col("_ok")).alias("rejected_rows"),
-    ).first()
-    clean = _split(parsed).clean
+    # a load that raises midway must not leave its parse persisted
+    try:
+        counts = parsed.agg(
+            F.count_if("_ok").alias("clean_rows"),
+            F.count_if(~F.col("_ok")).alias("rejected_rows"),
+        ).first()
+        clean = _split(parsed).clean
 
-    def read_dim(name: str) -> DataFrame | None:
-        # Only the path-missing case means "first run" (main.py:20-22).
-        # Treating ANY read failure as first-run would silently rebuild the
-        # dim with fresh ids starting at 1 while historical fact rows still
-        # reference the old ids — corrupting every prior fact join — so
-        # anything else (corrupt footer, permissions, transient IO) re-raises.
-        import py4j.protocol
-        from pyspark.errors import AnalysisException
+        def read_dim(name: str) -> DataFrame | None:
+            # Only the path-missing case means "first run" (main.py:20-22).
+            # Treating ANY read failure as first-run would silently rebuild the
+            # dim with fresh ids starting at 1 while historical fact rows still
+            # reference the old ids — corrupting every prior fact join — so
+            # anything else (corrupt footer, permissions, transient IO) re-raises.
+            import py4j.protocol
+            from pyspark.errors import AnalysisException
 
-        try:
-            return _read(spark, f"{warehouse}/{name}", DIM_SCHEMA)
-        except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
+            try:
+                return _read(spark, f"{warehouse}/{name}", DIM_SCHEMA)
+            except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
+                msg = str(e)
+                if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+                    return None
+                raise
 
-    dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
-    dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
-    dim_pais = _read(spark, f"{warehouse}/pais.tmp", DIM_SCHEMA)
+        dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
+        dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
+        dim_pais = _read(spark, f"{warehouse}/pais.tmp", DIM_SCHEMA)
 
-    dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
-    dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
-    dim_setor = _read(spark, f"{warehouse}/setor.tmp", DIM_SCHEMA)
+        dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
+        dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
+        dim_setor = _read(spark, f"{warehouse}/setor.tmp", DIM_SCHEMA)
 
-    # Publish the dim snapshots BEFORE appending the fact: the updated dims
-    # are supersets of the old ones, so publishing them first is always safe,
-    # whereas fact-first would — on a crash between the two steps — commit
-    # fact rows whose pais_id/setor_id exist only in the unswapped .tmp dirs.
-    # The rmtree+move pair itself is still not atomic (plain-parquet stand-in
-    # for MERGE INTO; a transactional table format is the production answer —
-    # SURVEY §7.4): a crash between them loses the old snapshot but never the
-    # new one, and never orphans committed fact keys.
-    import shutil
+        # Publish the dim snapshots BEFORE appending the fact: the updated dims
+        # are supersets of the old ones, so publishing them first is always safe,
+        # whereas fact-first would — on a crash between the two steps — commit
+        # fact rows whose pais_id/setor_id exist only in the unswapped .tmp dirs.
+        # The rmtree+move pair itself is still not atomic (plain-parquet stand-in
+        # for MERGE INTO; a transactional table format is the production answer —
+        # SURVEY §7.4): a crash between them loses the old snapshot but never the
+        # new one, and never orphans committed fact keys.
+        import shutil
 
-    for name in ("pais", "setor"):
-        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-        shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
-    dim_pais = _read(spark, f"{warehouse}/pais", DIM_SCHEMA)
-    dim_setor = _read(spark, f"{warehouse}/setor", DIM_SCHEMA)
-    fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
+        for name in ("pais", "setor"):
+            shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+            shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
+        dim_pais = _read(spark, f"{warehouse}/pais", DIM_SCHEMA)
+        dim_setor = _read(spark, f"{warehouse}/setor", DIM_SCHEMA)
+        fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
 
-    # partition the append-only fact by ingestion date: snapshot queries
-    # and retention drops prune whole directories, and each day's append
-    # never rewrites previous days (the scale form of main.py:44's
-    # timestamped inserts)
-    fact.withColumn("dt_coleta", F.to_date("data_coleta")).write.mode(
-        "append"
-    ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
+        # partition the append-only fact by ingestion date: snapshot queries
+        # and retention drops prune whole directories, and each day's append
+        # never rewrites previous days (the scale form of main.py:44's
+        # timestamped inserts)
+        fact.withColumn("dt_coleta", F.to_date("data_coleta")).write.mode(
+            "append"
+        ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
 
-    metrics = {
-        "clean_rows": counts["clean_rows"],
-        "rejected_rows": counts["rejected_rows"],
-        "pais_rows": dim_pais.count(),
-        "setor_rows": dim_setor.count(),
-        "fact_rows": _read(spark, f"{warehouse}/indice_financeiro", FACT_SCHEMA).count(),
-    }
-    parsed.unpersist()
-    return metrics
+        return {
+            "clean_rows": counts["clean_rows"],
+            "rejected_rows": counts["rejected_rows"],
+            "pais_rows": dim_pais.count(),
+            "setor_rows": dim_setor.count(),
+            "fact_rows": _read(
+                spark, f"{warehouse}/indice_financeiro", FACT_SCHEMA
+            ).count(),
+        }
+    finally:
+        parsed.unpersist()
 
 
 def flagship_top10(spark: SparkSession, warehouse: str) -> DataFrame:

@@ -529,15 +529,6 @@ def _keep_or_reuse(df: DataFrame) -> DataFrame:
     return keep_or_reuse(df, _SIG_SCOPE)
 
 
-def release_sig_caches() -> None:
-    """Unpersist every relation cached by the dedup operators
-    (:func:`simhash64_hamming_pairs`, :func:`minhash_candidate_pairs`).
-    Only call once previously returned DataFrames have been consumed."""
-    from rpa_etl_investing_spark.operators.caching import release_scope
-
-    release_scope(_SIG_SCOPE)
-
-
 def simhash64_hamming_pairs(
     docs: DataFrame,
     text_col: str = "text",

@@ -46,17 +46,10 @@ GRID = 1_000_000_000
 # exact rescan the cache prevents). keep() retires the previous call's
 # cache, bounding the leak at one live relation no matter how many
 # times tests/bench invoke the operator.
-from rpa_etl_investing_spark.operators.caching import keep, release_scope
+from rpa_etl_investing_spark.operators.caching import keep
 
 _EDGE_SCOPE = "graph_edges"
 _KCORE_SCOPE = "graph_kcore"
-
-
-def release_edge_caches() -> None:
-    """Unpersist every edge list cached by prior :func:`pagerank` /
-    :func:`bfs_hops` calls. Only call once all previously returned rank
-    DataFrames have been consumed — their plans read these caches."""
-    release_scope(_EDGE_SCOPE)
 
 
 def bfs_hops(edges: DataFrame, source, max_hops: int = 4) -> DataFrame:
@@ -150,13 +143,6 @@ def pagerank(
             )
         )
     return ranks
-
-
-def release_kcore_caches() -> None:
-    """Unpersist the per-round relations cached by prior
-    :func:`kcore_peel` calls. The RESULT DataFrame reads the last
-    round's cache, so only call once it has been consumed."""
-    release_scope(_KCORE_SCOPE)
 
 
 def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:

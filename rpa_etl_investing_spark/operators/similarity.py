@@ -26,6 +26,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rpa_etl_investing_spark.operators.dedup import _qident
+
 SCALE = 1e10
 # the SQL-string spelling of SCALE, interpolated into every generated
 # expression below so the Column-tree helpers and the parsed-SQL forms
@@ -34,13 +36,6 @@ SCALE = 1e10
 _SCALE_SQL = f"{int(SCALE)}E0"
 
 LSH_SEED = "spark-graft-lsh-v1"
-
-
-def _qident(name: str) -> str:
-    """Backtick-quote an identifier for interpolation into generated SQL
-    (escaping embedded backticks — ADVICE r10: the Column API quoted
-    names structurally; the SQL-string forms must do it lexically)."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def rademacher_hyperplanes(

@@ -17,6 +17,24 @@ from rpa_etl_investing_spark.catalog import (
     MAX_PLAN_STRING_LENGTH as _MAX_PLAN_STR,
 )
 
+PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def add_package_to_worker_path(spark: SparkSession) -> None:
+    """Put the package root, once, on the session's Python workers' path.
+
+    Workers (pandas UDFs, Python data sources) do not see the driver's
+    ``sys.path``. PySpark ships ``sparkContext.environment`` with every
+    Python function it creates and the JVM merges its ``PYTHONPATH``
+    into the worker's, so this works on a caller-built session after
+    its JVM is up. No lock: nothing else writes this entry, and every
+    caller that writes it writes the same value.
+    """
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PKG_ROOT not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([PKG_ROOT, *parts])
+
 
 def get_spark(
     app_name: str = "rpa-etl-investing-spark",
@@ -31,19 +49,6 @@ def get_spark(
     partitions would be pure task overhead; on a real cluster this knob
     is superseded by AQE coalescing, which stays enabled.
     """
-    # Python workers (pandas UDFs / mapInPandas) are forked with the
-    # driver's environment, NOT its sys.path: a driver launched from an
-    # arbitrary cwd (external harnesses run from /tmp) imports this package
-    # via its own path manipulation, but the workers then fail with
-    # ModuleNotFoundError. Exporting the package root on PYTHONPATH
-    # before the JVM starts makes worker imports cwd-independent.
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    py_path = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in py_path.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + py_path if py_path else "")
-        )
-
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
         n = os.cpu_count() or 8
@@ -78,4 +83,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    add_package_to_worker_path(spark)
     return spark

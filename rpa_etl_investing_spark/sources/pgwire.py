@@ -204,8 +204,9 @@ def write_via_pgwire(
     col_sql = ", ".join(columns)
 
     def _write_partition(rows) -> None:
-        # runs on the executor: import path comes from the shipped
-        # package zip (addPyFile) or local sys.path in local mode
+        # runs on the executor: the worker imports this module through
+        # the package root that session.add_package_to_worker_path puts
+        # on the workers' PYTHONPATH
         client = PgWireClient(address, port=port, user=user, database=database)
         try:
             client.query("BEGIN")

@@ -12,6 +12,11 @@ This test reproduces the driver: a subprocess with a bare
 every events-touching query plus the entry smoke. It must stay a subprocess —
 inside pytest's JVM, ``getOrCreate`` would return the already-tuned session
 and mask exactly the bug class this guards against.
+
+The child runs outside the repo root with the root off ``PYTHONPATH``, as
+the driver does: a Python worker started in the repo root imports the
+package from its working directory, which would hide a ``queries()`` that
+fails to put the package on the workers' path.
 """
 
 from __future__ import annotations
@@ -66,7 +71,8 @@ spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as contract
 
 out = {{}}
-out["__entry__"] = len(contract.entry(spark).collect())
+# entry() runs LAST: it too puts the package on the workers' path, which
+# would mask a queries() callable that fails to do so itself.
 qs = contract.queries()
 for name in {names!r}:
     # Reset session-persistent confs between queries: a conf set by an
@@ -77,17 +83,25 @@ for name in {names!r}:
         out[name] = qs[name](spark, {sf_dir!r}).count()
     except Exception as e:  # noqa: BLE001
         out[name] = f"ERROR {{type(e).__name__}}: {{e}}"
+out["__entry__"] = len(contract.entry(spark).collect())
 print("RESULT:" + json.dumps(out))
 """
 
 
 @pytest.mark.slow
-def test_events_queries_on_bare_session(sf_dir):
+def test_events_queries_on_bare_session(sf_dir, tmp_path):
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != REPO
+    )
     proc = subprocess.run(
         [sys.executable, "-c", _CHILD.format(repo=REPO, names=EVENTS_QUERIES, sf_dir=sf_dir)],
         capture_output=True,
         text=True,
         timeout=600,
+        cwd=tmp_path,
+        env=env,
     )
     lines = [l for l in proc.stdout.splitlines() if l.startswith("RESULT:")]
     assert proc.returncode == 0 and lines, (

@@ -157,8 +157,6 @@ def test_graph_caches_route_through_registry(spark):
     from rpa_etl_investing_spark.operators.graph import (
         kcore_peel,
         pagerank,
-        release_edge_caches,
-        release_kcore_caches,
     )
 
     edges = spark.createDataFrame(
@@ -169,8 +167,8 @@ def test_graph_caches_route_through_registry(spark):
     assert len(_STORE.get("graph_edges", [])) == 1
     kcore_peel(edges, k=2, rounds=2).collect()
     assert len(_STORE.get("graph_kcore", [])) == 3  # sym + one per round
-    release_edge_caches()
-    release_kcore_caches()
+    release_scope("graph_edges")
+    release_scope("graph_kcore")
     assert not _STORE.get("graph_edges") and not _STORE.get("graph_kcore")
 
 

@@ -2,8 +2,8 @@
 
 A real engine serves parallel queries; Spark supports driver-side
 thread pools (each action is an independent job), but the repo's own
-shared state — the persist registry's recency lists, the package-ship
-guard, the scratch-dir writers — had only ever run single-threaded.
+shared state — the persist registry's recency lists, the workers'
+package path, the scratch-dir writers — had only ever run single-threaded.
 These tests hammer exactly those paths:
 
 - the LRU registry under 16 threads × mixed scopes (no lost entries,
@@ -12,7 +12,7 @@ These tests hammer exactly those paths:
   8-thread pool WITH oracle comparison (the full-registry 8-thread
   sweep runs via ``scripts/verify_driver_contract.py --threads 8`` and
   is recorded in LOCAL_VERIFY; this keeps a fast regression in-suite),
-- _ship_package idempotence under concurrent first-touch.
+- the workers' package path staying a single entry under concurrent calls.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from tests.parity import run_compare
 
 # Slice chosen to cover the shared-state paths: dedup sig caches
 # (keep_or_reuse from both sides of self-joins), graph per-round keeps,
-# scratch-dir writers, pandas UDFs (package ship), SQL temp views, and
+# scratch-dir writers, pandas UDFs (worker imports), SQL temp views, and
 # plain joins/aggs for volume.
 CONCURRENT_SLICE = [
     "llm_minhash_pairs",
@@ -196,31 +196,35 @@ def test_lru_registry_thread_safety(spark):
         caching.release_scope(f"conc_scope_{j}")
 
 
-def test_ship_package_concurrent_first_touch(spark):
-    """All threads racing the first _ship_package on a fresh app id must
-    result in EXACTLY ONE build (the lock's double-check), and the
-    pandas-UDF path must work from every thread afterwards."""
-    import __spark_entry__ as contract
+def test_worker_path_holds_package_root_once(spark):
+    """get_spark puts the package root on the workers' PYTHONPATH once;
+    the helper keeps entries already there, and neither 8 threads racing
+    it nor a repeat call adds a second copy."""
+    import os
+    import sys
 
-    app = spark.sparkContext.applicationId
-    with contract._SHIP_LOCK:
-        contract._SHIPPED.discard(app)
+    from rpa_etl_investing_spark.session import PKG_ROOT, add_package_to_worker_path
 
-    builds = []
-    orig_add = spark.sparkContext.addPyFile
+    env = spark.sparkContext.environment
+    saved = env["PYTHONPATH"]
+    assert saved.split(os.pathsep).count(PKG_ROOT) == 1
+    start = threading.Barrier(8)
 
-    def counting_add(path):
-        builds.append(path)
-        return orig_add(path)
+    def race(_: int) -> None:
+        start.wait(timeout=30)
+        add_package_to_worker_path(spark)
 
-    spark.sparkContext.addPyFile = counting_add
+    old = sys.getswitchinterval()
     try:
+        env["PYTHONPATH"] = "extra_entry"
+        sys.setswitchinterval(1e-6)
         with ThreadPoolExecutor(max_workers=8) as pool:
-            list(pool.map(lambda _: contract._ship_package(spark), range(8)))
+            list(pool.map(race, range(8)))
+        add_package_to_worker_path(spark)
+        assert env["PYTHONPATH"] == os.pathsep.join([PKG_ROOT, "extra_entry"])
     finally:
-        spark.sparkContext.addPyFile = orig_add
-    assert len(builds) == 1, f"expected one ship, got {len(builds)}"
-    assert app in contract._SHIPPED
+        sys.setswitchinterval(old)
+        env["PYTHONPATH"] = saved
 
 
 def test_schema_cache_concurrent_eviction(monkeypatch):

@@ -404,17 +404,17 @@ def test_dedup_cache_registry_keys_on_corpus_not_just_plan_shape(spark):
     their own cached signatures — reuse keyed on plan shape alone once
     served sf0.01's signatures for sf0.001 (25 pairs instead of 28)."""
     from rpa_etl_investing_spark.catalog import tbl
-    from rpa_etl_investing_spark.operators import dedup
+    from rpa_etl_investing_spark.operators import caching, dedup
 
     d1 = tbl(spark, "/root/testdata/sf0.01", "documents")
     d2 = tbl(spark, "/root/testdata/sf0.001", "documents")
-    dedup.release_sig_caches()
+    caching.release_scope("dedup_sigs")
     fresh1 = dedup.minhash_candidate_pairs(d1).count()
     fresh2 = dedup.minhash_candidate_pairs(d2).count()  # d1 now cached
-    dedup.release_sig_caches()
+    caching.release_scope("dedup_sigs")
     alone2 = dedup.minhash_candidate_pairs(d2).count()
     assert fresh2 == alone2
     # and same-corpus invocations DO reuse the registry entry
     again1 = dedup.minhash_candidate_pairs(d1).count()
     assert again1 == fresh1
-    dedup.release_sig_caches()
+    caching.release_scope("dedup_sigs")

@@ -191,6 +191,24 @@ def test_load_job_budget_and_cold_contract(spark, raw_df, tmp_path):
     assert jobs_of(f"{tag}:flagship", lambda: flagship_top10(spark, wh)) == 0
 
 
+def test_failed_load_leaves_nothing_persisted(spark, raw_df, tmp_path, monkeypatch):
+    """A load that raises after the batch is parsed must release the
+    persisted parse: it adds no RDD to the session's persisted set."""
+    from rpa_etl_investing_spark.etl import pipeline
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("fact key resolution failed")
+
+    before = persisted()
+    monkeypatch.setattr(pipeline, "resolve_fact_keys", boom)
+    with pytest.raises(RuntimeError, match="fact key resolution failed"):
+        load_star_schema(spark, raw_df, str(tmp_path / "warehouse"), PIN_TS)
+    assert persisted() <= before
+
+
 def test_incremental_streaming_load(spark, tmp_path):
     """The reference's repeated-run loop as a foreachBatch stream: two
     arriving files → two micro-batch loads; dims stay unique, facts

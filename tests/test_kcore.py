@@ -6,7 +6,8 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from rpa_etl_investing_spark.operators.graph import kcore_peel, release_kcore_caches
+from rpa_etl_investing_spark.operators import caching
+from rpa_etl_investing_spark.operators.graph import kcore_peel
 
 
 def _edges(spark, pairs):
@@ -46,7 +47,7 @@ def test_matches_sequential_reference(spark):
     }
     assert got == _py_kcore(PAIRS, 3, 4)
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
-    release_kcore_caches()
+    caching.release_scope("graph_kcore")
 
 
 @pytest.mark.slow
@@ -86,7 +87,7 @@ def test_fixture_graph_converges_at_registered_rounds(spark, sf_dir):
     )
     q5 = {(r.node, r.deg) for r in kcore_peel(edges, 3, 5).collect()}
     assert q4 == q5
-    release_kcore_caches()
+    caching.release_scope("graph_kcore")
 
 
 def test_graph_that_fully_peels_is_empty(spark):
@@ -94,4 +95,4 @@ def test_graph_that_fully_peels_is_empty(spark):
     and the operator returns an empty frame rather than erroring."""
     edges = _edges(spark, [(0, 1), (1, 2), (2, 3)])
     assert kcore_peel(edges, 3, 4).count() == 0
-    release_kcore_caches()
+    caching.release_scope("graph_kcore")

@@ -103,10 +103,10 @@ def test_bfs_reach_iterates_on_cached_graph(spark, sf_dir):
     # (one InMemoryTableScan per hop join), never re-expand the fact
     # aggregation into live scans — same guard as the pagerank test
     assert plan.count("InMemoryTableScan") >= 4, plan
-    from rpa_etl_investing_spark.operators.graph import release_edge_caches
+    from rpa_etl_investing_spark.operators import caching
 
     df.count()  # consume before retiring the cache
-    release_edge_caches()
+    caching.release_scope("graph_edges")
 
 
 def test_running_sum_rejects_float_values(spark):
